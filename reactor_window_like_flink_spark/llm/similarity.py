@@ -623,9 +623,10 @@ def knn_graph(
     import pandas as pd
 
     from reactor_window_like_flink_spark.functions.batching import (
-        complete_group_chunks,
+        map_sorted_groups,
     )
     from reactor_window_like_flink_spark.llm.dedup import (
+        _bucket_gram_slabs,
         auto_lsh_bits,
         auto_lsh_plan,
         emb_band_buckets_fast,
@@ -643,64 +644,38 @@ def knn_graph(
     buckets = emb_band_buckets_fast(emb, bands=bands, bits=bits, seed=seed)
     grouped = buckets.join(emb, "vec_id")
 
-    # r16 kernel-shape rework (guide §4.1, the lsh_cosine_pairs_fast
-    # twin): groupBy(band, bucket).applyInPandas paid one Python call +
-    # pandas-frame construction per bucket (~bands·2^bits tiny groups);
-    # the same grouping now rides one repartition+sortWithinPartitions
-    # exchange and a partition-wise mapInPandas walks group boundaries
-    # with numpy, running the IDENTICAL per-group blocked top-k kernel
-    # — same groups, same matmuls, same tie repair, identical output.
-    def bucket_topk_chunk(pdf):
-        band = pdf["band"].to_numpy().astype("int64")
-        bucket = pdf["bucket"].to_numpy().astype("int64")
-        vec_id = pdf["vec_id"].to_numpy()
-        key = (band << 32) | bucket  # bucket is a non-negative int32
-        # id-ascending order inside each group makes column index order
-        # = id order, so the (cos desc, id asc) global tie-break is
-        # reproducible locally — ties keep the ids the final window
-        # would keep, and no candidate the global top-k needs is ever
-        # dropped here.
-        order = np.lexsort((vec_id, key))
-        key, all_ids = key[order], vec_id[order]
-        all_x = np.stack(pdf["embedding"].to_numpy())[order].astype("float64")
-        all_xn = all_x / np.linalg.norm(all_x, axis=1)[:, None]
-        bounds = np.flatnonzero(np.r_[True, key[1:] != key[:-1], True])
+    def bucket_topk(pdf, bounds):
+        # vec_id ascends inside each bucket, so column index order is id
+        # order: the (cos desc, id asc) global tie-break is reproducible
+        # locally, and no candidate the global top-k needs is dropped
         out_v: list = []
         out_u: list = []
         out_c: list = []
-        block = 512  # bound the (block x m) gram slab, not the bucket
-        for g0, g1 in zip(bounds[:-1], bounds[1:]):
-            m = g1 - g0
-            if m < 2:
-                continue
-            ids, xn = all_ids[g0:g1], all_xn[g0:g1]
-            kk = min(k, m - 1)  # uniform per bucket: same m for all rows
-            for s in range(0, m, block):
-                g = xn[s : s + block] @ xn.T
-                rows = g.shape[0]
-                # self never a neighbor: mask the diagonal slice once
-                g[np.arange(rows), s + np.arange(rows)] = -np.inf
-                sel = np.empty((rows, kk), dtype=np.int64)
-                for i in range(rows):
-                    gi = g[i]
-                    # O(m) argpartition for the value top-kk, then repair
-                    # boundary ties: argpartition picks an ARBITRARY
-                    # subset of entries tied at the cutoff, but the
-                    # tie-break wants the smallest ids — widen to all
-                    # boundary-tied indices and lexsort (cos desc, id
-                    # asc) only that small set.
-                    part = np.argpartition(-gi, kk - 1)[:kk]
-                    vmin = gi[part].min()
-                    ties = np.nonzero(gi == vmin)[0]
-                    if len(ties) > int((gi[part] == vmin).sum()):
-                        cand = np.concatenate([part[gi[part] > vmin], ties])
-                    else:
-                        cand = part
-                    sel[i] = cand[np.lexsort((cand, -gi[cand]))][:kk]
-                flat = sel.ravel()
-                out_v.append(np.repeat(ids[s : s + rows], kk))
-                out_u.append(ids[flat])
-                out_c.append(g[np.repeat(np.arange(rows), kk), flat])
+        for ids, s, g in _bucket_gram_slabs(pdf, bounds):
+            kk = min(k, len(ids) - 1)  # uniform per bucket: same m for all rows
+            rows = g.shape[0]
+            # self never a neighbor: mask the diagonal slice once
+            g[np.arange(rows), s + np.arange(rows)] = -np.inf
+            sel = np.empty((rows, kk), dtype=np.int64)
+            for i in range(rows):
+                gi = g[i]
+                # O(m) argpartition for the value top-kk, then repair
+                # boundary ties: argpartition picks an ARBITRARY subset
+                # of entries tied at the cutoff, but the tie-break wants
+                # the smallest ids — widen to all boundary-tied indices
+                # and sort (cos desc, id asc) only that small set.
+                part = np.argpartition(-gi, kk - 1)[:kk]
+                vmin = gi[part].min()
+                ties = np.nonzero(gi == vmin)[0]
+                if len(ties) > int((gi[part] == vmin).sum()):
+                    cand = np.sort(np.concatenate([part[gi[part] > vmin], ties]))
+                else:
+                    cand = np.sort(part)
+                sel[i] = cand[np.argsort(-gi[cand], kind="stable")][:kk]
+            flat = sel.ravel()
+            out_v.append(np.repeat(ids[s : s + rows], kk))
+            out_u.append(ids[flat])
+            out_c.append(g[np.repeat(np.arange(rows), kk), flat])
         if out_v:
             return pd.DataFrame(
                 {
@@ -711,22 +686,14 @@ def knn_graph(
             )
         return None
 
-    def bucket_topk_batches(batches):
-        # r17 §5 memory bound (judge item 3): walk complete-group chunks
-        # (one Arrow batch + the one straddling group held back) instead
-        # of concatenating the whole partition — identical per-group
-        # math, bounded Python heap (see functions/batching.py).
-        for pdf in complete_group_chunks(batches, ("band", "bucket")):
-            out = bucket_topk_chunk(pdf)
-            if out is not None:
-                yield out
-
-    n_parts = emb.sparkSession.sparkContext.defaultParallelism
     scored = (
-        grouped.repartition(n_parts, "band", "bucket")
-        .sortWithinPartitions("band", "bucket")
-        .mapInPandas(
-            bucket_topk_batches, "vec_id long, neighbor_id long, _cos double"
+        map_sorted_groups(
+            grouped,
+            ("band", "bucket"),
+            ("vec_id",),
+            ("vec_id", "embedding"),
+            bucket_topk,
+            "vec_id long, neighbor_id long, _cos double",
         )
         # the same neighbor surfaces from every shared bucket; gemm can
         # differ at ULP level across bucket shapes, so canonicalize with

@@ -162,33 +162,18 @@ def daily_kll_sketches(events: DataFrame, k: int = KLL_K) -> DataFrame:
     """The materialized daily-sketch table: one KLL sketch per
     (event_type, day) over ``value``, built in canonical (ts, event_id)
     order. This is the frame a production pipeline WRITES daily; every
-    coarser rollup merges these rows without re-reading events.
-
-    Kernel shape (r16, guide §4.1): the previous
-    ``groupBy(event_type, day).applyInPandas`` paid one Python call +
-    one pandas-frame construction + one per-group mergesort PER GROUP.
-    The same grouping now rides one repartition(event_type, day) +
-    sortWithinPartitions(..., ts, event_id) exchange — every group
-    lands whole and pre-sorted in canonical order — and a
-    partition-wise ``mapInPandas`` walks the group boundaries, feeding
-    each slice to the IDENTICAL KLLSketch build. Only
-    (event_type, day, value) cross the Python boundary (ts/event_id
-    are sort keys, dropped after the sort — guide §4.1's
-    pass-only-what-the-function-needs). Sketches are unchanged: same
-    groups, same insertion order, same compaction schedule."""
-    import numpy as np
-
+    coarser rollup merges these rows without re-reading events. One
+    sorted-group walk (``functions/batching.map_sorted_groups``) feeds
+    each group's values to ``KLLSketch`` in that order, so the
+    compaction schedule is the canonical one."""
     from reactor_window_like_flink_spark.functions.batching import (
-        complete_group_chunks,
+        map_sorted_groups,
     )
 
-    def build_chunk(pdf):
+    def build(pdf, bounds):
         et = pdf["event_type"].to_numpy()
         day = pdf["day"].to_numpy()
         vals = pdf["value"].to_numpy()
-        bounds = np.flatnonzero(
-            np.r_[True, (et[1:] != et[:-1]) | (day[1:] != day[:-1]), True]
-        )
         out = {"event_type": [], "day": [], "n": [], "levels": [], "coins": []}
         for g0, g1 in zip(bounds[:-1], bounds[1:]):
             s = KLLSketch(k)
@@ -201,16 +186,6 @@ def daily_kll_sketches(events: DataFrame, k: int = KLL_K) -> DataFrame:
             out["coins"].append(coins)
         return pd.DataFrame(out)
 
-    def build_batches(batches):
-        # r17 §5 memory bound (judge item 3): walk complete-group chunks
-        # (one Arrow batch + the one straddling group held back) instead
-        # of concatenating the whole partition — same groups, same
-        # in-group row order (carry precedes the next batch), so the
-        # canonical KLL insertion order and compaction schedule are
-        # unchanged (see functions/batching.py).
-        for pdf in complete_group_chunks(batches, ("event_type", "day")):
-            yield build_chunk(pdf)
-
     daily = events.select(
         "event_type",
         F.date_trunc("day", "ts").alias("day"),
@@ -218,12 +193,13 @@ def daily_kll_sketches(events: DataFrame, k: int = KLL_K) -> DataFrame:
         "event_id",
         "value",
     )
-    n_parts = events.sparkSession.sparkContext.defaultParallelism
-    return (
-        daily.repartition(n_parts, "event_type", "day")
-        .sortWithinPartitions("event_type", "day", "ts", "event_id")
-        .select("event_type", "day", "value")
-        .mapInPandas(build_batches, _SKETCH_SCHEMA)
+    return map_sorted_groups(
+        daily,
+        ("event_type", "day"),
+        ("ts", "event_id"),
+        ("value",),
+        build,
+        _SKETCH_SCHEMA,
     )
 
 

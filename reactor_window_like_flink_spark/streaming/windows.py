@@ -25,6 +25,13 @@ from reactor_window_like_flink_spark.sources.tables import load
 REG = Registry()
 
 
+def _measures() -> tuple[F.Column, F.Column]:
+    return (
+        F.count("*").alias("n_events"),
+        (F.round(F.sum("value") * 100, 0) / 100.0).alias("sum_value"),
+    )
+
+
 def _tumbling(df: DataFrame) -> DataFrame:
     """Shared expression tree for batch + streaming tumbling windows.
     groupBy(window) emits nothing for empty buckets — the reference's
@@ -32,13 +39,44 @@ def _tumbling(df: DataFrame) -> DataFrame:
     in Spark."""
     return (
         df.groupBy(F.window("ts", "5 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
-        )
+        .agg(*_measures())
         .select(
             F.unix_timestamp(F.col("w.start")).alias("window_start"),
             "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def _sliding(df: DataFrame) -> DataFrame:
+    """Shared expression tree for batch + streaming 10-minute windows
+    sliding every 5: each event lands in exactly size/slide = 2 windows."""
+    return (
+        df.groupBy(
+            F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
+        )
+        .agg(*_measures())
+        .select(
+            F.unix_timestamp(F.col("w.start")).alias("window_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
+
+
+def _session(df: DataFrame) -> DataFrame:
+    """Shared expression tree for batch + streaming per-user sessions
+    with a 5-minute inactivity gap; a session closes at last event + gap
+    (half-open)."""
+    return (
+        df.groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
+        .agg(*_measures())
+        .select(
+            "user_id",
+            F.unix_timestamp(F.col("sw.start")).alias("session_start"),
+            F.unix_timestamp(F.col("sw.end")).alias("session_end"),
             "n_events",
             "sum_value",
         )
@@ -81,22 +119,7 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """10-minute windows sliding every 5 — each event lands in exactly
     size/slide = 2 windows (the conservation invariant the tests assert)."""
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy(
-            F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type"
-        )
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _sliding(load(spark, sf_dir, "events"))
 
 
 @REG.add(
@@ -127,21 +150,7 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic gaps-and-islands rewrite; Spark's session_window closes a
     session at last_event + gap (half-open), matching the >= 300s
     new-session flag."""
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("sw.start")).alias("session_start"),
-            F.unix_timestamp(F.col("sw.end")).alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _session(load(spark, sf_dir, "events"))
 
 
 def count_or_time_replay(
@@ -273,38 +282,11 @@ def stream_dedup(stream_df: DataFrame, watermark: str = "10 minutes") -> DataFra
 def stream_sliding(stream_df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming 10-min/5-min sliding windows (each event in exactly 2
     open windows; watermark bounds how long both stay in state)."""
-    return (
-        stream_df.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "10 minutes", "5 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
-        )
-        .select(
-            F.unix_timestamp(F.col("w.start")).alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _sliding(stream_df.withWatermark("ts", watermark))
 
 
 def stream_session(stream_df: DataFrame, watermark: str = "10 minutes") -> DataFrame:
     """Streaming per-user session windows (5-min gap). Session state merges
     as events arrive and finalizes once the watermark passes
     session_end — append mode emits each session exactly once."""
-    return (
-        stream_df.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            (F.round((F.sum("value")) * 100, 0) / 100.0).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.unix_timestamp(F.col("sw.start")).alias("session_start"),
-            F.unix_timestamp(F.col("sw.end")).alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
-    )
+    return _session(stream_df.withWatermark("ts", watermark))

@@ -105,3 +105,19 @@ def test_every_headline_key_has_a_bar():
 def test_guards_and_index_backed_reference_real_keys():
     assert set(GUARD.values()) <= set(HEADLINE)
     assert set(INDEX_BACKED) <= set(HEADLINE) | set(GUARD)
+
+
+def test_failed_core_probe_records_null(monkeypatch):
+    """A probe that raises yields ``None``, and the summary line still
+    builds from an artifact whose end probe is null."""
+    import bench
+
+    def boom(_):
+        raise OSError("no processes")
+
+    monkeypatch.setattr(bench, "_calib_worker", boom)
+    assert bench._epoch_calib_mc(2) is None
+    payload = _payload()
+    payload["epoch_calib_mc"]["end"] = None
+    d = json.loads(compact_summary(payload))
+    assert d["eff_cores"] == {"start": 7.0}

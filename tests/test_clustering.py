@@ -306,6 +306,70 @@ def test_kcore_matches_sequential_reference_on_random_graph(spark):
         assert got == _kcore_reference(edges, k)
 
 
+def _random_graph(rng, n_nodes, n_edges):
+    return {tuple(sorted(rng.sample(range(n_nodes), 2))) for _ in range(n_edges)}
+
+
+def test_kcore_local_finish_kernel_on_random_batches():
+    """The single-task peel behind ``_kcore_loop``'s ``two_m`` gate equals
+    sequential peeling whatever batches the symmetric edge list arrives
+    in."""
+    import random
+
+    import pandas as pd
+
+    from reactor_window_like_flink_spark.llm.clustering import (
+        _kcore_peel_kernel,
+    )
+
+    rng = random.Random(17)
+    for _ in range(300):
+        edges = _random_graph(rng, rng.randint(2, 40), rng.randint(1, 150))
+        sym = sorted({(u, v) for u, v in edges} | {(v, u) for u, v in edges})
+        rng.shuffle(sym)
+        n_cuts = min(len(sym), rng.randint(0, 5))
+        cuts = sorted(rng.sample(range(1, len(sym) + 1), n_cuts))
+        batches = [
+            pd.DataFrame(sym[a:b], columns=["src", "dst"])
+            for a, b in zip([0, *cuts], [*cuts, len(sym)])
+        ]
+        k = rng.randint(1, 6)
+        got = {}
+        for out in _kcore_peel_kernel(k)(iter(batches)):
+            got.update(zip(out["node"], out["degree"]))
+        assert got == _kcore_reference(edges, k)
+
+
+def test_kcore_loop_local_finish_gate_matches_reference(spark):
+    """``_kcore_loop(..., two_m=...)`` under the local-finish threshold
+    runs the one-task numpy peel; ``max_rounds=0`` shows the gate, not
+    the round loop, produced the core (the gate ignores max_rounds)."""
+    import random
+
+    from reactor_window_like_flink_spark.llm.clustering import (
+        _kcore_build,
+        _kcore_loop,
+    )
+
+    rng = random.Random(29)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for _ in range(4):
+            edges = _random_graph(rng, 60, 300)
+            df = spark.createDataFrame(sorted(edges), "u long, v long")
+            spark.conf.set(key, str(rng.randint(1, 64)))
+            for k in (3, 5, 8):
+                sym, deg = _kcore_build(df)
+                core = _kcore_loop(
+                    sym, deg, k, max_rounds=0, two_m=2 * len(edges)
+                )
+                got = {r["node"]: r["degree"] for r in core.collect()}
+                assert got == _kcore_reference(edges, k)
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_kcore_keeps_clique_peels_tendrils(spark):
     """A 6-clique with a pendant path hanging off it: the 5-core is
     exactly the clique (every tendril node peels), and an empty edge
